@@ -1274,7 +1274,7 @@ WHERE round(len(list_intersect(a.g, b.g))::DOUBLE /
 # min-label propagation (recursive CTE; a component's min doc_id reaches
 # every member because each step extends a path by one undirected edge)
 # over the same brute-force 3-gram Jaccard>=0.5 edges as _NGRAM_ORACLE.
-# Unrounded threshold -- it replays verify_jaccard's filter (verify.py:80),
+# Unrounded threshold -- it replays verify_jaccard's threshold test,
 # not the rounded report column. Exact-duplicate docs are J=1 edges, so the
 # sha layer needs no separate edge set.
 _INCREMENTAL_CLUSTERS_ORACLE = """

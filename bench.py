@@ -211,9 +211,10 @@ def run(sf_dir: str, cpus: int, passes=("minhash", "simhash", "substring"),
             "n_files": n_files,
             "n_clusters": n_clusters,
             "cpus": cpus,
-            "deltas_vs_prev": deltas_vs_prev(timings),
+            "deltas_vs_prev": deltas_vs_prev(timings, cpus, sf),
             "queries_warm": warm,
-            "deltas_warm_vs_prev": deltas_vs_prev(warm, key="queries_warm"),
+            "deltas_warm_vs_prev": deltas_vs_prev(warm, cpus, sf,
+                                                  key="queries_warm"),
         }
         # host-noise telemetry (same /proc/stat readers as the scaling
         # harness): steal_frac > ~0.05 marks a burst-degraded window whose
@@ -248,38 +249,62 @@ def run_profiled(sf_dir: str, cpus: int) -> dict:
     return run(sf_dir, cpus, skip_queries=True, collect_stages=True)
 
 
-def deltas_vs_prev(timings: dict[str, float], key: str = "queries") -> dict:
-    """Per-query regression report vs the newest BENCH_r{N}.json on disk:
-    regressions get named in the bench output instead of being discovered
-    by the judge (single-box variance is ~+-20-30%; flag beyond that).
+def _prev_record(doc, key: str, cpus: int, sf: float) -> dict | None:
+    """The `key` timings of one BENCH_r*.json record, or None when the
+    record is unusable for comparison: a dark run (`parsed: null`), no
+    timings under `key`, or a different core count or scale factor."""
+    # the driver wraps the bench line under "parsed"; a bare bench line
+    # carries its keys at the top level
+    line = doc.get("parsed", doc) if isinstance(doc, dict) else None
+    if not isinstance(line, dict):
+        return None
+    if line.get("cpus") != cpus or line.get("sf") != sf:
+        return None
+    prev = line.get(key)
+    return prev if isinstance(prev, dict) and prev else None
+
+
+def deltas_vs_prev(timings: dict[str, float], cpus: int, sf: float,
+                   key: str = "queries", root: str | None = None) -> dict:
+    """Per-query regression report vs the newest comparable BENCH_r{N}.json
+    on disk: regressions get named in the bench output instead of being
+    discovered by the judge (single-box variance is ~+-20-30%; flag beyond
+    that). Comparable means same `cpus` and `sf` and a parsed record with
+    timings; newer records that are not comparable are skipped, so a dark
+    run or a record from another host never breaks or pollutes the report.
 
     key="queries" compares cold timings; key="queries_warm" compares the
     warm repeats -- warm-vs-warm is the low-noise signal (plan cost only),
-    so a warm regression is structural, not first-touch jitter."""
+    so a warm regression is structural, not first-touch jitter. `root` is
+    the directory holding the records (default: this file's directory)."""
     import glob
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    prevs = sorted(
-        glob.glob(os.path.join(here, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    if not prevs:
-        return {}
-    prev_path = prevs[-1]
-    try:
-        with open(prev_path) as f:
-            doc = json.load(f)
-        # the driver wraps the bench line under "parsed"
-        prev = doc.get(key) or doc.get("parsed", {}).get(key) or {}
-    except (OSError, json.JSONDecodeError):
-        return {}
-    out: dict[str, object] = {"prev": os.path.basename(prev_path)}
-    for name, sec in timings.items():
-        if name in prev and prev[name]:
-            pct = 100.0 * (sec - prev[name]) / prev[name]
-            out[name] = f"{pct:+.0f}%"
-    return out
+    here = root or os.path.dirname(os.path.abspath(__file__))
+    # newest round first; within a round, the plain BENCH_rNN.json (the
+    # driver's record) before suffixed variants, then by name
+    def order(path: str) -> tuple:
+        name = os.path.basename(path)
+        return (-int(re.search(r"r(\d+)", name).group(1)),
+                not re.fullmatch(r"BENCH_r\d+\.json", name), name)
+
+    for prev_path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json")),
+                            key=order):
+        try:
+            with open(prev_path) as f:
+                doc = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            continue
+        prev = _prev_record(doc, key, cpus, sf)
+        if prev is None:
+            continue
+        out: dict[str, object] = {"prev": os.path.basename(prev_path)}
+        for name, sec in timings.items():
+            if prev.get(name):
+                pct = 100.0 * (sec - prev[name]) / prev[name]
+                out[name] = f"{pct:+.0f}%"
+        return out
+    return {}
 
 
 def main() -> None:

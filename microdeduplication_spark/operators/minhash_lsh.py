@@ -13,8 +13,8 @@ Scale notes (10^12 files, north_rule skew clause):
   24 bytes of payload, no content strings.
 - within-bucket pairs come from ONE hash exchange, not a self-join: bucket
   sizes via a count window on the bucket key, member lists collected in
-  place on the preserved partitioning, pairs expanded map-side with JVM
-  higher-order functions (see banded_self_join).
+  place on the preserved partitioning, pairs expanded map-side by two
+  chained generators, no higher-order lambdas (see banded_self_join).
 - hot buckets: buckets over `bucket_drop` are degenerate (near-empty
   shingle sets, boilerplate) and dropped ROW-WISE before any member list
   is built (an adversarial all-identical corpus cannot OOM an aggregation
@@ -78,14 +78,16 @@ def lsh_bands(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(file_id, band_idx, band_hash): xxhash64 over each r-row slice of sig.
 
     Band hashing stays JVM-side: xxhash64 accepts array arguments, and the
-    band index is salted into the hash so identical slices in different bands
-    cannot collide into one bucket.
+    band index (an int) is salted into the hash so identical slices in
+    different bands cannot collide into one bucket. The band expressions
+    are unrolled driver-side (as simhash_bands does): each band is a plain
+    codegen'd expression and the plan holds no lambda.
     """
     r = cfg.rows_per_band
-    band_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(cfg.lsh_bands - 1)),
-        lambda j: F.xxhash64(j, F.slice(F.col("sig"), j * F.lit(r) + F.lit(1), r)),
-    )
+    band_arr = F.array(*[
+        F.xxhash64(F.lit(j), F.slice(F.col("sig"), j * r + 1, r))
+        for j in range(cfg.lsh_bands)
+    ])
     return sigs.select(
         "file_id", F.posexplode(band_arr).alias("band_idx", "band_hash")
     )
@@ -150,10 +152,16 @@ def banded_self_join(
        cfg.bucket_drop (degenerate buckets are dropped row-wise BEFORE any
        list is built, so an adversarial all-identical corpus cannot OOM an
        aggregation buffer).
-    3. pairs expand MAP-SIDE from each list with JVM higher-order
-       functions: all-pairs for small buckets (<= bucket_cap members,
-       <= C(cap,2) structs per row), star pairs against the bucket minimum
-       for hot buckets (linear; elision reported by hot_bucket_stats).
+    3. pairs expand MAP-SIDE from each list with two chained
+       generators: posexplode emits the left member a_id at position i,
+       explode emits every member after position i as b_id. All pairs
+       for small buckets (<= bucket_cap members), star pairs against the
+       bucket minimum for hot buckets (only the list head is a left
+       member; linear, elision reported by hot_bucket_stats). Generators
+       run in whole-stage codegen and emit pair rows directly; nested
+       transform() lambdas would build a struct array per bucket through
+       interpreted lambda variables, about twice the cost for the same
+       pair set.
        The small/hot split is a per-row CASE over the same rows, NOT a
        where/where/union plan fork -- a fork re-executes the whole
        upstream (scan + signature UDF + exchange + window) once per
@@ -174,36 +182,31 @@ def banded_self_join(
         (F.col("bucket_n") >= 2) & (F.col("bucket_n") <= cfg.bucket_drop)
     )
     grouped = active.groupBy(*key).agg(
-        F.array_sort(F.collect_list("file_id")).alias("lst"),
+        # sort_array, not array_sort: array_sort carries a comparator
+        # lambda in the plan; on non-null longs both give ascending order
+        F.sort_array(F.collect_list("file_id")).alias("lst"),
         F.first("bucket_n").alias("bucket_n"),
     )
 
-    def _expand(rows: DataFrame, pairs_col) -> DataFrame:
+    def _expand(rows: DataFrame) -> DataFrame:
+        # two chained generators, no lambdas: member i of the sorted list
+        # pairs with every member after it (all pairs, i < j) in buckets
+        # up to bucket_cap; a hot bucket emits only its head (the bucket
+        # minimum) as the left side, which star-pairs it with the rest
+        heads = F.when(
+            F.col("bucket_n") <= cfg.bucket_cap, F.col("lst")
+        ).otherwise(F.slice("lst", 1, 1))
         return (
-            rows.select(F.explode(pairs_col).alias("p"))
-            .select(F.col("p.a_id").alias("a_id"), F.col("p.b_id").alias("b_id"))
+            rows.select("lst", F.posexplode(heads).alias("i", "a_id"))
+            .select(
+                "a_id",
+                F.explode(
+                    F.slice("lst", F.col("i") + 2, F.size("lst"))
+                ).alias("b_id"),
+            )
             # same file twice in one bucket (repeated fingerprint) -> no pair
             .where(F.col("a_id") < F.col("b_id"))
         )
-
-    # all pairs (i < j) of the sorted member list -- small buckets only
-    all_pairs = F.flatten(
-        F.transform(
-            F.col("lst"),
-            lambda x, i: F.transform(
-                F.slice(F.col("lst"), i + F.lit(2), F.size(F.col("lst"))),
-                lambda y: F.struct(x.alias("a_id"), y.alias("b_id")),
-            ),
-        )
-    )
-    # star pairing against the bucket min (= head of the sorted list),
-    # map-side: n-1 structs per hot bucket, bounded by bucket_drop
-    star_pairs = F.transform(
-        F.slice(F.col("lst"), 2, F.size(F.col("lst"))),
-        lambda y: F.struct(
-            F.element_at(F.col("lst"), 1).alias("a_id"), y.alias("b_id")
-        ),
-    )
 
     if not exact_hot:
         # ONE consumer of `grouped`: the small/hot split is a per-row CASE
@@ -211,11 +214,8 @@ def banded_self_join(
         # where/where/union fork re-executes the whole upstream (scan +
         # signature UDF + exchange + window) once per branch. Measured on
         # the standalone minhash query: 5.4s -> 3.1s warm at sf0.1.
-        pairs_col = F.when(
-            F.col("bucket_n") <= cfg.bucket_cap, all_pairs
-        ).otherwise(star_pairs)
         return (
-            _expand(grouped, pairs_col)
+            _expand(grouped)
             .distinct()  # the same pair can surface from several bands
             .withColumn("method", F.lit(method))
         )
@@ -225,7 +225,7 @@ def banded_self_join(
     # upstream still computes once.
     grouped = grouped.localCheckpoint(eager=False)
     small = grouped.where(F.col("bucket_n") <= cfg.bucket_cap)
-    small_pairs = _expand(small, all_pairs)
+    small_pairs = _expand(small)
 
     big = grouped.where(F.col("bucket_n") > cfg.bucket_cap)
     # exact mode for pair-level consumers: salted all-pairs. Hot-bucket

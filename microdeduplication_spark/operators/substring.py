@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from microdeduplication_spark.config import DedupConfig
 from microdeduplication_spark.functions.text import line_hashes
 from microdeduplication_spark.operators.minhash_lsh import banded_self_join
+from microdeduplication_spark.operators.verify import keep_at_least
 
 
 def line_hash_sets(reps: DataFrame) -> DataFrame:
@@ -81,7 +82,7 @@ def verify_containment(
     """Exact line-set containment check -> (a_id, b_id, method, score).
 
     score = |A cap B| / min(|A|, |B|) on distinct line-hash sets; JVM-side
-    array_intersect, no Python.
+    array_intersect, no Python, evaluated once per pair.
     """
     # semi-join reduction: filter the wide line-set table to candidate ids
     # before the pair joins (same plan shape as verify.verify_jaccard)
@@ -106,14 +107,16 @@ def verify_containment(
     sets_b = reduced.select(
         F.col("file_id").alias("b_id"), F.col("line_set").alias("b_set")
     )
-    inter = F.size(F.array_intersect("a_set", "b_set"))
-    denom = F.least(F.size("a_set"), F.size("b_set"))
-    return (
-        candidates.join(sets_a, "a_id")
-        .join(sets_b, "b_id")
-        .withColumn("score", inter / denom)
-        .where(F.col("score") >= F.lit(cfg.containment_threshold))
-        .select("a_id", "b_id", "method", "score")
+    # the intersection is a projected column and the threshold a generator
+    # (verify.keep_at_least): a Filter on `score` would be pushed into the
+    # join condition and evaluate the intersection there a second time
+    pairs = candidates.join(sets_a, "a_id").join(sets_b, "b_id").select(
+        "a_id", "b_id", "method",
+        F.size(F.array_intersect("a_set", "b_set")).alias("inter"),
+        F.least(F.size("a_set"), F.size("b_set")).alias("denom"),
+    )
+    return keep_at_least(
+        pairs, F.col("inter") / F.col("denom"), cfg.containment_threshold
     )
 
 

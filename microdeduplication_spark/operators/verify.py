@@ -13,6 +13,19 @@ computed with JVM-side array_intersect on sorted distinct arrays: no Python,
 no recomputation of the sets per pair (the reference recomputes its tf maps
 for every window comparison).
 
+The intersection is computed ONCE per pair, as a column of the joined
+pairs, and the threshold is applied by keep_at_least's generator, not by a
+Filter. Both are about the optimizer, not style: written as one inline
+expression the intersection appears three times in the score (numerator
+and twice in the union), and a `score >= t` Filter over a projection is
+pushed down through it into the join condition with the score expression
+substituted -- the optimized plan would carry six array_intersect calls
+per pair, the most expensive expression of the verify stage. A
+projected column referenced by a later expression survives CollapseProject
+(it will not duplicate a non-trivial expression), and a Filter cannot be
+pushed below a Generate whose output it reads, so the plan evaluates the
+intersection once and the threshold stays in the same codegen stage.
+
 Scale notes: the id->shingles joins carry the widest payload of the
 pipeline (shingle arrays). The shingle table is first reduced with a
 semi-join on the candidate id set -- candidate ids are a tiny fraction of
@@ -26,7 +39,7 @@ local mode via AQE).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from microdeduplication_spark.config import DedupConfig
@@ -75,13 +88,29 @@ def verify_jaccard(
     sets_b = reduced.select(
         F.col("file_id").alias("b_id"), F.col("shingles").alias("b_sh")
     )
-    inter = F.size(F.array_intersect("a_sh", "b_sh"))
-    union = F.size("a_sh") + F.size("b_sh") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        candidates.join(sets_a, "a_id")
-        .join(sets_b, "b_id")
-        .withColumn("score", jac)
-        .where(F.col("score") >= F.lit(cfg.jaccard_threshold))
-        .select("a_id", "b_id", "method", "score")
+    pairs = candidates.join(sets_a, "a_id").join(sets_b, "b_id").select(
+        "a_id", "b_id", "method",
+        F.size(F.array_intersect("a_sh", "b_sh")).alias("inter"),
+        (F.size("a_sh") + F.size("b_sh")).alias("sizes"),
     )
+    union = F.col("sizes") - F.col("inter")
+    jac = F.when(union > 0, F.col("inter") / union).otherwise(F.lit(0.0))
+    return keep_at_least(pairs, jac, cfg.jaccard_threshold)
+
+
+def keep_at_least(pairs: DataFrame, score: Column, threshold: float) -> DataFrame:
+    """(a_id, b_id, method, ...) -> (a_id, b_id, method, score) for the rows
+    whose `score` is >= `threshold`.
+
+    The threshold is a generator, not a Filter: inline() emits the one-row
+    array when the score passes and nothing otherwise (a CASE with no ELSE
+    is null, and inline of null emits no rows). The optimizer cannot push a
+    predicate through a generator, so the score's inputs -- the
+    intersection column of the caller's projection -- are evaluated once
+    per pair instead of being substituted into a pushed-down filter or join
+    condition (see the module docstring)."""
+    scored = pairs.select("a_id", "b_id", "method", score.alias("score"))
+    row = F.struct("a_id", "b_id", "method", "score")
+    return scored.select(F.inline(
+        F.when(F.col("score") >= F.lit(threshold), F.array(row))
+    ))

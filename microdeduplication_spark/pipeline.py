@@ -381,11 +381,14 @@ def run_pipeline(
             )
         )
         cand_stage_names.append("cand_minhash")
-        if eager_metrics == "count":
+        if eager_metrics == "count" and checkpoint_dir is None:
             # star-pairing elision + dropped degenerate buckets: the
             # hot-bucket path changes pair-level semantics, so the extent
             # must be a reported metric, never silent. The tiny stats job
             # rides the level-3 thread pool, overlapping cand_minhash.
+            # Checkpoint mode reports it once below instead, after the
+            # cand_minhash parquet write (a deferred job here would race
+            # that write and record the metric a second time).
             ck.defer_stats(
                 "cand_minhash_skew",
                 minhash_lsh.hot_bucket_stats(bands, cfg),

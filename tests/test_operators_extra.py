@@ -377,6 +377,27 @@ def test_pipeline_reports_skew_metrics(spark):
             "dropped_rows"} <= set(skew[0])
 
 
+def test_pipeline_reports_skew_once_in_checkpoint_mode(spark, tmp_path):
+    """count-mode metrics with a checkpoint dir: the skew report is taken
+    once, after the cand_minhash parquet write, not also by a deferred job
+    racing that write."""
+    from microdeduplication_spark.config import DedupConfig
+    from microdeduplication_spark.pipeline import run_pipeline
+
+    rows = [("r", f"p{i}", "c", "py", f"def f{i}():\n    return {i}\n")
+            for i in range(30)]
+    files = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    res = run_pipeline(spark, files, DedupConfig(), passes=("minhash",),
+                       checkpoint_dir=str(tmp_path / "ck"),
+                       eager_metrics="count")
+    skew = [m for m in res.metrics if m.get("stage") == "cand_minhash_skew"]
+    assert len(skew) == 1
+    assert {"hot_buckets", "pairs_elided", "dropped_buckets",
+            "dropped_rows"} <= set(skew[0])
+
+
 def test_srp_topk_recall_vs_bruteforce(spark):
     """Bucketed top-k must recover the brute-force top-3 for queries whose
     true neighbors are genuinely near (planted clusters at cos~0.99)."""

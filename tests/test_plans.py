@@ -124,6 +124,49 @@ def test_banded_join_is_map_side_single_exchange(spark, cfg):
     assert plan.count("Exchange hashpartitioning") <= 3
 
 
+def test_verify_intersects_each_pair_once(spark, cfg):
+    """The set intersection is evaluated once per pair: no copy of it is
+    inlined into a pushed-down filter or join condition, nor repeated
+    inside the score expression."""
+    from microdeduplication_spark.operators.substring import verify_containment
+    from microdeduplication_spark.operators.verify import verify_jaccard
+
+    cands = spark.createDataFrame(
+        [(1, 2, "minhash"), (1, 3, "simhash"), (2, 3, "minhash")],
+        "a_id long, b_id long, method string",
+    )
+    sets = spark.createDataFrame(
+        [(1, [1, 2, 3]), (2, [1, 2, 4]), (3, [2, 3])],
+        "file_id long, shingles array<long>",
+    )
+    jac = verify_jaccard(cands, sets, cfg)
+    assert _optimized(jac).count("array_intersect") == 1
+    lined = sets.select("file_id", F.col("shingles").alias("line_set"))
+    cont = verify_containment(cands, lined, cfg)
+    assert _optimized(cont).count("array_intersect") == 1
+
+
+def test_pair_expansion_has_no_lambda(spark, cfg):
+    """Bucket pairs and band hashes are plain codegen'd expressions and
+    generators: no higher-order function lambda in either optimized plan."""
+    from microdeduplication_spark.operators.minhash_lsh import (
+        banded_self_join,
+        lsh_bands,
+    )
+
+    bands = spark.createDataFrame(
+        [(i, i % 3, i % 5) for i in range(50)],
+        "file_id long, band_idx int, band_hash long",
+    )
+    for exact_hot in (False, True):
+        plan = _optimized(banded_self_join(bands, cfg, "m", exact_hot=exact_hot))
+        assert "lambdafunction" not in plan, exact_hot
+    sigs = spark.createDataFrame(
+        [(1, list(range(cfg.num_perms)))], "file_id long, sig array<long>"
+    )
+    assert "lambdafunction" not in _optimized(lsh_bands(sigs, cfg))
+
+
 def test_bucketed_join_colocates_without_exchange(spark, tmp_path):
     """The 100 TB claim in verify.py -- 'the shingle table would be bucketed
     by file_id so the pair joins co-locate without a shuffle' -- proven at

@@ -145,12 +145,12 @@ def run(sf_dir: str, cpus: int, passes=("minhash", "simhash", "substring"),
         n_files = files.count()
         t0 = time.monotonic()
         e2e_s0 = _steal_sec()
-        # eager "count": persist + materialize each stage before the next --
-        # measured FASTER than persist-only: without forced materialization,
-        # branches of one wide job race to populate the cache and recompute
-        # shared lineage (139s vs 87s at 8 cores, 20k files)
-        res = run_pipeline(spark, files, DedupConfig(), passes=passes,
-                           eager_metrics="count")
+        # in memory, run_pipeline persists every stage and materializes it
+        # on the stage pool as soon as its inputs are ready; that was
+        # measured faster than persist-only, where branches of one wide job
+        # race to populate the cache and recompute shared lineage (87 s vs
+        # 139 s at 8 cores, 20k files)
+        res = run_pipeline(spark, files, DedupConfig(), passes=passes)
         n_clusters = res.clusters.select("cluster_id").distinct().count()
         dedup_sec = time.monotonic() - t0
         e2e_steal = _steal_sec() - e2e_s0

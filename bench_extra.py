@@ -50,7 +50,7 @@ def pipeline_profile(sf_dir: str, cpus: int) -> None:
         files = read_files(spark, parquet_path=corpus_path).repartition(n_parts)
         n_files = files.count()
         t0 = time.monotonic()
-        res = run_pipeline(spark, files, DedupConfig(), eager_metrics="count")
+        res = run_pipeline(spark, files, DedupConfig())
         n_clusters = res.clusters.select("cluster_id").distinct().count()
         wall = time.monotonic() - t0
         jobs = _rest(spark, "jobs")

@@ -45,7 +45,7 @@ def main(argv=None) -> int:
     from pyspark.sql import SparkSession
 
     from microdeduplication_spark.config import DedupConfig
-    from microdeduplication_spark.pipeline import run_pipeline
+    from microdeduplication_spark.pipeline import job_label, run_pipeline
     from microdeduplication_spark.sources.files_source import read_files
     from microdeduplication_spark.statistics import (
         cluster_size_histogram,
@@ -75,17 +75,21 @@ def main(argv=None) -> int:
         cfg,
         checkpoint_dir=args.checkpoint_dir,
         passes=tuple(args.passes.split(",")),
-        eager_metrics="count" if args.checkpoint_dir is None else False,
     )
-    res.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
-    res.verified.write.mode("overwrite").parquet(f"{args.output}/verified")
-    cluster_size_histogram(res.clusters).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{args.output}/stats")
-
-    summary = dedup_summary(
-        spark.read.parquet(f"{args.output}/clusters")
-    )
+    # every job carries a label: stage:<name> inside run_pipeline,
+    # output:<table> for the writes
+    with job_label(spark, "output:clusters"):
+        res.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
+    with job_label(spark, "output:verified"):
+        res.verified.write.mode("overwrite").parquet(f"{args.output}/verified")
+    with job_label(spark, "output:stats"):
+        cluster_size_histogram(res.clusters).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{args.output}/stats")
+    with job_label(spark, "output:summary"):
+        summary = dedup_summary(
+            spark.read.parquet(f"{args.output}/clusters")
+        )
     manifest = {"config": cfg.to_dict(), "summary": summary,
                 "stages": res.metrics}
     out_json = json.dumps(manifest, indent=1, default=str)

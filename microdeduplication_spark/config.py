@@ -7,6 +7,8 @@ One frozen dataclass carries every tunable of the dedup pipeline so that the
 
 from __future__ import annotations
 
+import hashlib
+import json
 from dataclasses import asdict, dataclass
 
 
@@ -58,9 +60,6 @@ class DedupConfig:
     # buckets larger than this are dropped entirely (degenerate bands --
     # near-empty shingle sets); the count is reported in stage metrics.
     bucket_drop: int = 20000
-    # max candidate pairs verified per file pair source before sampling kicks
-    # in (guard against adversarial all-same corpora); 0 = unlimited.
-    max_pairs_per_bucket: int = 0
 
     # --- determinism ------------------------------------------------------
     seed: int = 42
@@ -92,3 +91,13 @@ class DedupConfig:
 
 
 DEFAULT_CONFIG = DedupConfig()
+
+
+def cfg_hash(cfg: DedupConfig, passes: tuple[str, ...]) -> str:
+    """Stable digest of a config plus the run-shape keys stored with it (the
+    active passes, a layout token) -- the one hash that checkpoint and index
+    manifests compare. Python's builtin str hash is seeded per process, so
+    it cannot serve."""
+    doc = json.dumps({"cfg": asdict(cfg), "passes": sorted(passes)},
+                     sort_keys=True)
+    return hashlib.sha256(doc.encode()).hexdigest()[:16]

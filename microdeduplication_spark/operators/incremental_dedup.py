@@ -50,16 +50,14 @@ Scale design (10^12-file corpus, 10^7-10^9-file daily batch):
 from __future__ import annotations
 
 import glob
-import hashlib
 import json
 import os
 import shutil
-from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from microdeduplication_spark.config import DedupConfig
+from microdeduplication_spark.config import DedupConfig, cfg_hash
 from microdeduplication_spark.operators import (
     connected_components as cc,
     exact_dedup,
@@ -71,12 +69,6 @@ from microdeduplication_spark.operators.minhash_lsh import banded_self_join
 from microdeduplication_spark.operators.verify import verify_jaccard
 
 ALL_PASSES = ("minhash", "simhash", "substring")
-
-
-def _cfg_hash(cfg: DedupConfig, passes: tuple[str, ...]) -> str:
-    doc = json.dumps({"cfg": asdict(cfg), "passes": sorted(passes)},
-                     sort_keys=True)
-    return hashlib.sha256(doc.encode()).hexdigest()[:16]
 
 
 def _manifest_path(index_dir: str) -> str:
@@ -92,7 +84,7 @@ def _check_manifest(index_dir: str, cfg: DedupConfig,
                     passes: tuple[str, ...]) -> None:
     with open(_manifest_path(index_dir)) as f:
         man = json.load(f)
-    got = _cfg_hash(cfg, passes)
+    got = cfg_hash(cfg, passes)
     if man["cfg_hash"] != got:
         raise ValueError(
             f"index {index_dir} was built with cfg_hash={man['cfg_hash']} "
@@ -107,7 +99,7 @@ def _rep_features(reps: DataFrame, cfg: DedupConfig,
     """(file_id, shingles, [sig], [sim], [fps, line_set]) for distinct reps.
 
     One shingle scan feeds every signature family (same economy as the
-    pipeline's fused signature stage, pipeline.py:276-293)."""
+    pipeline's fused shingles stage)."""
     shingled = minhash_lsh.add_shingles(reps, cfg).localCheckpoint(eager=False)
     cols = [F.col("file_id"), F.col("shingles")]
     if "minhash" in passes:
@@ -138,27 +130,20 @@ def _rep_features(reps: DataFrame, cfg: DedupConfig,
 def _features_from_result(res, cfg: DedupConfig,
                           passes: tuple[str, ...]) -> DataFrame:
     """Index rep features PROJECTED from the pipeline's own persisted
-    stages (shingled/signatures/lined) instead of re-running the Arrow
-    kernels over the whole corpus -- init_index previously paid the
-    dominant signature stage twice. Only the substring window fingerprints
-    are recomputed (from the persisted line hashes, skipping the line-hash
-    kernel). Falls back to _rep_features when a stage is missing."""
+    stages (shingled, which carries the fused sig/sim columns, and lined)
+    instead of re-running the Arrow kernels over the whole corpus --
+    init_index previously paid the dominant signature stage twice. Only the
+    substring window fingerprints are recomputed (from the persisted line
+    hashes, skipping the line-hash kernel). Falls back to _rep_features
+    when a stage is missing."""
     st = res.stages
-    if "shingled" not in st or (
-        ("minhash" in passes or "simhash" in passes)
-        and "signatures" not in st
-    ) or ("substring" in passes and "lined" not in st):
+    if "shingled" not in st or ("substring" in passes and "lined" not in st):
         groups = exact_dedup.exact_groups(res.normalized)
         reps = exact_dedup.representatives(res.normalized, groups)
         return _rep_features(reps, cfg, passes)
-    feats = st["shingled"].select("file_id", "shingles")
-    if "minhash" in passes or "simhash" in passes:
-        sig_cols = ["file_id"]
-        if "minhash" in passes:
-            sig_cols.append("sig")
-        if "simhash" in passes:
-            sig_cols.append("sim")
-        feats = feats.join(st["signatures"].select(*sig_cols), "file_id")
+    sig_cols = [c for p, c in (("minhash", "sig"), ("simhash", "sim"))
+                if p in passes]
+    feats = st["shingled"].select("file_id", "shingles", *sig_cols)
     if "substring" in passes:
         from microdeduplication_spark.functions.hashing import (
             make_window_fp_udf,
@@ -192,7 +177,7 @@ def init_index(spark: SparkSession, files: DataFrame, cfg: DedupConfig,
         [], "old_cluster_id long, new_cluster_id long"
     ).write.mode("overwrite").parquet(os.path.join(index_dir, "remap"))
     with open(_manifest_path(index_dir), "w") as f:
-        json.dump({"cfg_hash": _cfg_hash(cfg, passes),
+        json.dump({"cfg_hash": cfg_hash(cfg, passes),
                    "passes": sorted(passes)}, f)
     return res
 

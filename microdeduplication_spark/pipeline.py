@@ -8,32 +8,50 @@ Stage graph (SURVEY.md §3 "new-engine lifecycle"):
         -> (+ exact star edges) -> connected_components -> clusters
 
 Each stage is a pure DataFrame->DataFrame function (operators/*); this module
-only composes them, persists per-stage checkpoint tables, and records the
-lineage manifest (north_rule: "resumable from checkpoint with per-partition
-lineage + metrics").
+only composes them through `_Checkpointer.run`, which has two behaviours:
 
-Checkpoint contract: stage outputs land at <dir>/<stage>/ as parquet with a
-sibling <dir>/<stage>.manifest.json carrying {stage, config, input_stages,
-rows, partitions, wall_ms}. On rerun, a stage whose manifest matches the
-current config hash is read back instead of recomputed; deleting any stage
-directory invalidates it and everything downstream recomputes from the last
-valid prefix -- tested by test_pipeline.py::test_resume_idempotent.
+- In memory (checkpoint_dir=None): the stage is persisted and materialized by
+  one count job on the stage pool once its input stages have materialized,
+  so independent stages run as concurrent Spark jobs. Its metrics entry
+  carries the row count and the materialization wall time.
+- With checkpoint_dir: the stage lands at <dir>/<stage>/ as parquet with a
+  sibling <dir>/<stage>.manifest.json carrying {stage, build_id,
+  config_hash, config, inputs, input_ids, rows, partitions, wall_ms}. On
+  rerun, a stage whose manifest matches the current config hash and the
+  build ids of its inputs is read back instead of recomputed; deleting any
+  stage directory invalidates it and everything downstream recomputes from
+  the last valid prefix -- tested by test_pipeline.py::test_resume_idempotent.
+
+Checkpoint set (layout `stage-layout-v3`, folded into the config hash so a
+dir written by an earlier layout rebuilds instead of reloading): normalized,
+exact_edges, shingles (file_id, lang, shingles and the fused sig/sim
+columns), cand_substring, cand_minhash, cand_simhash, verified, clusters.
+The signature columns are a projection of shingles, not a stage. The
+non-stage intermediates (exact groups, representatives, line hashes) are
+persisted in both modes, and `cand_minhash_skew` is a one-row metrics entry
+recorded whenever cand_minhash is built in the run.
+
+Job labels: every Spark job a run starts carries the job description
+`stage:<name>` of the stage it serves -- the pool's materialization jobs and
+the jobs the main thread starts while building a stage (lazy
+localCheckpoint under AQE, broadcasts, connected-components rounds). The
+caller's job description is restored when each stage returns.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from microdeduplication_spark.config import DedupConfig
+from microdeduplication_spark.config import DedupConfig, cfg_hash
 from microdeduplication_spark.operators import (
     connected_components as cc,
     exact_dedup,
@@ -44,6 +62,8 @@ from microdeduplication_spark.operators import (
 )
 
 ALL_PASSES = ("minhash", "simhash", "substring")
+# folded into the checkpoint config hash; bump when a stage's table changes
+STAGE_LAYOUT = "stage-layout-v3"
 
 
 @dataclass
@@ -56,36 +76,43 @@ class PipelineResult:
     # intermediate stage handles (persisted/checkpointed) so downstream
     # consumers (incremental_dedup.init_index) can PROJECT per-rep features
     # instead of re-running the Arrow kernels over the whole corpus:
-    # "shingled" (file_id, lang, shingles), "signatures" (file_id,[sig],[sim]),
-    # "lined" (substring pass input). Keys absent when the pass didn't run.
+    # "shingled" (file_id, lang, shingles, [sig], [sim]), "lined" (substring
+    # pass input). Keys absent when the pass didn't run.
     stages: dict = field(default_factory=dict)
 
 
+@contextmanager
+def job_label(spark: SparkSession, label: str):
+    """Run the block with Spark job description `label` (a thread-local
+    property), then restore the caller's description."""
+    sc = spark.sparkContext
+    before = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(before)
+
+
 class _Checkpointer:
-    """Per-stage parquet checkpoints with config-hashed manifests."""
+    """Runs stages: persisted and materialized on the stage pool in memory,
+    or per-stage parquet checkpoints with config-hashed manifests."""
 
     def __init__(self, spark: SparkSession, root: str | None, cfg: DedupConfig,
-                 eager: bool | str = False, extra_key: tuple = ()):
+                 passes: tuple[str, ...]):
         self.spark = spark
         self.root = root
-        # in-memory stage handling: False = fully lazy, "persist" / True =
-        # persist each stage (no extra action), "count" = persist+count+time
-        self.eager = eager
-        # stable across processes (Python's builtin str hash is seeded per run).
-        # extra_key folds run-shape parameters that are not part of DedupConfig
-        # (e.g. the active `passes` tuple) into the hash, so rerunning with a
-        # different pass set against the same checkpoint dir invalidates
-        # everything rather than reloading a stale 'verified'/'clusters'.
-        self.cfg_hash = hashlib.sha256(
-            json.dumps([cfg.to_dict(), list(extra_key)], sort_keys=True).encode()
-        ).hexdigest()[:16]
+        # the active passes are part of the hash: rerunning with a different
+        # pass set against the same dir rebuilds everything rather than
+        # reloading a stale 'verified'/'clusters'
+        self.cfg_hash = cfg_hash(cfg, tuple(passes) + (STAGE_LAYOUT,))
         self.cfg = cfg
         self.metrics: list[dict] = []
         # build_id of each stage's current-session output; downstream stages
         # record the exact build_ids they consumed, so rebuilding any upstream
         # stage (new build_id) invalidates the whole downstream suffix.
         self.build_ids: dict[str, str] = {}
-        # count-mode async materialization: stage -> Future (see _submit)
+        # in-memory async materialization: stage -> Future (see _submit)
         self._futures: dict = {}
         self._executor = None
 
@@ -97,33 +124,16 @@ class _Checkpointer:
 
     def run(self, stage: str, build, input_stages: list[str]) -> DataFrame:
         """Build (or reload) one stage; record lineage metrics either way."""
-        t0 = time.monotonic()
-        if self.root is None:
-            df = build()
-            if self.eager == "count":
-                # throughput/profiling mode: persist now, materialize
-                # asynchronously once the stage's INPUT stages finish --
-                # the whole stage DAG runs as concurrent Spark jobs with
-                # dependency-aware ordering, so forced materialization no
-                # longer serializes anything (Spark's per-block cache locks
-                # make even an early touch of shared lineage compute each
-                # partition exactly once)
-                df = df.persist()
+        with job_label(self.spark, f"stage:{stage}"):
+            if self.root is None:
+                df = build().persist()
                 self._submit(stage, df, input_stages)
-            elif self.eager:
-                # throughput mode: persist so shared lineage computes once,
-                # but add no extra action -- the first consumer materializes
-                df = df.persist()
-                self.metrics.append(
-                    {"stage": stage, "cached": False, "wall_ms": None,
-                     "inputs": input_stages}
-                )
-            else:
-                self.metrics.append(
-                    {"stage": stage, "cached": False, "wall_ms": None,
-                     "inputs": input_stages}
-                )
-            return df
+                return df
+            return self._checkpoint(stage, build, input_stages)
+
+    def _checkpoint(self, stage: str, build,
+                    input_stages: list[str]) -> DataFrame:
+        t0 = time.monotonic()
         data_dir, man_path = self._paths(stage)
         expected_inputs = {s: self.build_ids.get(s) for s in input_stages}
         if os.path.exists(man_path) and os.path.exists(data_dir):
@@ -187,8 +197,7 @@ class _Checkpointer:
                 d.result()
             t0 = time.monotonic()
             # job descriptions are thread-local: label this stage's
-            # materialization job so the UI/REST profile attributes CPU to
-            # the stage instead of "count at CompletableFuture"
+            # materialization job on the pool thread too
             self.spark.sparkContext.setJobDescription(f"stage:{stage}")
             if first:
                 row = df.first().asDict()
@@ -237,50 +246,37 @@ def run_pipeline(
     cfg: DedupConfig | None = None,
     checkpoint_dir: str | None = None,
     passes: tuple[str, ...] = ALL_PASSES,
-    eager_metrics: bool | str = False,
 ) -> PipelineResult:
     """files(repo,path,commit,lang,content) -> PipelineResult.
 
-    checkpoint_dir=None runs fully lazy/in-memory (tests); a path makes every
-    stage an idempotent parquet checkpoint (resumable, north_rule).
-    eager_metrics materializes + times every in-memory stage (profiling).
+    checkpoint_dir=None persists and materializes every stage in memory; a
+    path makes every stage an idempotent parquet checkpoint (resumable,
+    north_rule).
     """
     cfg = cfg or DedupConfig()
-    # "layout-v2": the shingles stage now carries the fused sig/sim columns;
-    # folding a layout token into the config hash refuses checkpoint dirs
-    # written by the previous layout (clean rebuild) instead of reloading a
-    # shingles table the signatures projection cannot be built from
-    ck = _Checkpointer(spark, checkpoint_dir, cfg, eager=eager_metrics,
-                       extra_key=tuple(passes) + ("stage-layout-v2",))
-
     if not any(p in passes for p in ALL_PASSES):
         raise ValueError("at least one pass required")
+    ck = _Checkpointer(spark, checkpoint_dir, cfg, passes)
 
     # ---- level 0: ingest ------------------------------------------------
     normalized = ck.run(
         "normalized", lambda: exact_dedup.ingest_normalize(files, cfg), []
     )
-    if checkpoint_dir is None:
-        normalized = normalized.persist()
+
+    # non-stage intermediates, each read by two consumers (groups:
+    # exact_edges and reps; reps: shingles and lined; lined: cand_substring
+    # and verified): persisted so each computes once
+    groups = exact_dedup.exact_groups(normalized).persist()
+    reps = exact_dedup.representatives(normalized, groups).persist()
+    lined = (substring.line_hash_sets(reps).persist()
+             if "substring" in passes else None)
 
     # ---- level 1: exact edges + shingles (independent) -------------------
-    groups = exact_dedup.exact_groups(normalized)
-    if checkpoint_dir is None:
-        # three consumers (exact_edges, representatives x2 via shingles and
-        # lined): persist the tiny (norm_sha, rep_id, group_size) table so
-        # each consumer's job reuses the agg instead of re-reading the full
-        # normalized cache and re-running the hash aggregate
-        groups = groups.persist()
     ex_edges = ck.run(
         "exact_edges",
         lambda: exact_dedup.exact_edges(normalized, groups),
         ["normalized"],
     )
-    reps = exact_dedup.representatives(normalized, groups)
-    if checkpoint_dir is None:
-        # two consumers (shingles, lined): persist so the normalized-cache
-        # scan + rep semi-join computes once instead of per consumer
-        reps = reps.persist()
 
     need_mh = "minhash" in passes
     need_sh = "simhash" in passes
@@ -313,46 +309,11 @@ def run_pipeline(
         ).select(*cols)
 
     shingled = ck.run("shingles", _build_shingled, ["normalized"])
-    if checkpoint_dir is None:
-        shingled = shingled.persist()
 
-    # ---- level 2: signatures (a projection of the fused shingle table;
-    #               kept as a stage so checkpoints/metrics/consumers keep
-    #               their layout) + substring fingerprints ----------------
+    # ---- level 2: candidate joins (independent given shingles/lines) -----
     cand_parts: list[DataFrame] = []
     cand_stage_names: list[str] = []
-    sigs = None
-    sig_dep = ["signatures"]
-    if need_mh or need_sh:
-
-        def _build_signatures() -> DataFrame:
-            cols = [F.col("file_id")]
-            if need_mh:
-                cols.append(F.col("sig"))
-            if need_sh:
-                cols.append(F.col("sim"))
-            return shingled.select(*cols)
-
-        if checkpoint_dir is None:
-            # pure projection of the PERSISTED fused shingle table: a
-            # second cache copy + its count job bought nothing in-memory
-            # (the consumers slice the parent cache just as fast), and in
-            # the concurrent count-mode wave the extra job contended with
-            # the candidate stages. Checkpoint mode keeps the real stage
-            # (its parquet table is the resume point test_resume pins).
-            sigs = _build_signatures()
-            ck.metrics.append(
-                {"stage": "signatures", "cached": False, "wall_ms": None,
-                 "inputs": ["shingles"], "projection": True}
-            )
-            sig_dep = ["shingles"]
-        else:
-            sigs = ck.run("signatures", _build_signatures, ["shingles"])
-    lined = None
-    if "substring" in passes:
-        lined = substring.line_hash_sets(reps)
-        if checkpoint_dir is None:
-            lined = lined.persist()
+    if lined is not None:
         cand_parts.append(
             ck.run(
                 "cand_substring",
@@ -362,92 +323,77 @@ def run_pipeline(
         )
         cand_stage_names.append("cand_substring")
 
-    # ---- level 3: candidate joins (independent given signatures) ---------
-    bands = None
-    if "minhash" in passes:
-        bands = minhash_lsh.lsh_bands(sigs.select("file_id", "sig"), cfg)
-        if eager_metrics == "count" or checkpoint_dir is not None:
-            # the band table has TWO consumers on these paths (the banded
-            # join and hot_bucket_stats); a lazy localCheckpoint computes
-            # the explode + per-band xxhash once instead of per consumer
-            # (narrow (file_id, band_idx, band_hash) rows, ~24 B each).
-            # The stats-free lazy path keeps the single-consumer stream.
-            bands = bands.localCheckpoint(eager=False)
+    if need_mh:
+        bands = None
+
+        def _build_cand_minhash() -> DataFrame:
+            nonlocal bands
+            # two consumers (the banded join and hot_bucket_stats): a lazy
+            # localCheckpoint computes the explode + per-band xxhash once
+            # (narrow (file_id, band_idx, band_hash) rows, ~24 B each)
+            bands = minhash_lsh.lsh_bands(
+                shingled.select("file_id", "sig"), cfg
+            ).localCheckpoint(eager=False)
+            return minhash_lsh.candidate_pairs(bands, cfg)
+
         cand_parts.append(
-            ck.run(
-                "cand_minhash",
-                lambda: minhash_lsh.candidate_pairs(bands, cfg),
-                sig_dep,
-            )
+            ck.run("cand_minhash", _build_cand_minhash, ["shingles"])
         )
         cand_stage_names.append("cand_minhash")
-        if eager_metrics == "count" and checkpoint_dir is None:
-            # star-pairing elision + dropped degenerate buckets: the
-            # hot-bucket path changes pair-level semantics, so the extent
-            # must be a reported metric, never silent. The tiny stats job
-            # rides the level-3 thread pool, overlapping cand_minhash.
-            # Checkpoint mode reports it once below instead, after the
-            # cand_minhash parquet write (a deferred job here would race
-            # that write and record the metric a second time).
+        if bands is not None:
+            # built in this run (a reloaded checkpoint elided nothing now;
+            # its original run reported it). Star-pairing elision and
+            # dropped degenerate buckets change pair-level semantics, so
+            # their extent is a reported metric, never silent; the one-row
+            # stats job runs on the stage pool after cand_minhash.
             ck.defer_stats(
                 "cand_minhash_skew",
                 minhash_lsh.hot_bucket_stats(bands, cfg),
                 input_stages=["cand_minhash"],
             )
-    if "simhash" in passes:
+    if need_sh:
         cand_parts.append(
             ck.run(
                 "cand_simhash",
                 lambda: simhash_op.candidate_pairs(
-                    sigs.select("file_id", "sim"), cfg
+                    shingled.select("file_id", "sim"), cfg
                 ),
-                sig_dep,
+                ["shingles"],
             )
         )
         cand_stage_names.append("cand_simhash")
 
-    if bands is not None and checkpoint_dir is not None:
-        built = any(
-            m.get("stage") == "cand_minhash" and not m.get("cached")
-            for m in ck.metrics
-        )
-        if built:
-            # checkpoint-mode skew report (skipped when cand_minhash
-            # reloaded: nothing was elided in this run; the original run's
-            # manifest already reported it)
-            skew = minhash_lsh.hot_bucket_stats(bands, cfg).first().asDict()
-            ck.metrics.append(
-                {"stage": "cand_minhash_skew", "cached": False, **skew}
-            )
     candidates = cand_parts[0]
     for p in cand_parts[1:]:
         candidates = candidates.unionByName(p)
 
-    # verify each (a,b) once; candidate provenance kept as a joined-back method
-    sim_cands = (
-        candidates.where(F.col("method") != "substring")
-        .groupBy("a_id", "b_id")
-        .agg(F.min("method").alias("method"))
-    )
-    ver_parts = [verify.verify_jaccard(sim_cands, shingled, cfg)]
-    if lined is not None:
-        sub_cands = candidates.where(F.col("method") == "substring").select(
-            "a_id", "b_id", "method"
+    def _build_verified() -> DataFrame:
+        # verify each (a,b) once; candidate provenance kept as a
+        # joined-back method
+        sim_cands = (
+            candidates.where(F.col("method") != "substring")
+            .groupBy("a_id", "b_id")
+            .agg(F.min("method").alias("method"))
         )
-        ver_parts.append(substring.verify_containment(sub_cands, lined, cfg))
-    verified = ver_parts[0]
-    for p in ver_parts[1:]:
-        verified = verified.unionByName(p)
+        verified = verify.verify_jaccard(sim_cands, shingled, cfg)
+        if lined is not None:
+            sub_cands = candidates.where(
+                F.col("method") == "substring"
+            ).select("a_id", "b_id", "method")
+            verified = verified.unionByName(
+                substring.verify_containment(sub_cands, lined, cfg)
+            )
+        return verified
+
     # 'verified' consumes every active cand_* stage: rebuilding any of them
     # (or toggling a pass -- also folded into cfg_hash) invalidates it
-    verified = ck.run("verified", lambda: verified,
+    verified = ck.run("verified", _build_verified,
                       ["shingles"] + cand_stage_names)
 
-    edges = verified.select(
-        F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-    ).unionByName(ex_edges)
-
     def _build_clusters() -> DataFrame:
+        edges = verified.select(
+            F.col("a_id").alias("src"), F.col("b_id").alias("dst")
+        ).unionByName(ex_edges)
         assign = cc.connected_components(edges)
         all_ids = normalized.select("file_id").distinct()
         return all_ids.join(assign, "file_id", "left").select(
@@ -458,24 +404,17 @@ def run_pipeline(
     # the clusters build runs driver-side actions (connected components),
     # so its inputs must be materialized before build() executes
     ck.wait("verified", "exact_edges")
-    spark.sparkContext.setJobDescription("stage:clusters")
     clusters = ck.run("clusters", _build_clusters, ["verified", "exact_edges"])
-    spark.sparkContext.setJobDescription(None)
     ck.sync()
 
+    stages = {"shingled": shingled}
+    if lined is not None:
+        stages["lined"] = lined
     return PipelineResult(
         clusters=clusters,
         verified=verified,
         candidates=candidates,
         normalized=normalized,
         metrics=ck.metrics,
-        stages={
-            k: v
-            for k, v in (
-                ("shingled", shingled),
-                ("signatures", sigs),
-                ("lined", lined),
-            )
-            if v is not None
-        },
+        stages=stages,
     )

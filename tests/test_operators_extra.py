@@ -360,7 +360,7 @@ def test_hot_bucket_star_elision_and_exact_mode(spark):
 
 
 def test_pipeline_reports_skew_metrics(spark):
-    """count-mode pipeline metrics include the cand_minhash_skew entry."""
+    """in-memory pipeline metrics include one cand_minhash_skew entry."""
     from microdeduplication_spark.config import DedupConfig
     from microdeduplication_spark.pipeline import run_pipeline
 
@@ -369,8 +369,7 @@ def test_pipeline_reports_skew_metrics(spark):
     files = spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, content string"
     )
-    res = run_pipeline(spark, files, DedupConfig(), passes=("minhash",),
-                       eager_metrics="count")
+    res = run_pipeline(spark, files, DedupConfig(), passes=("minhash",))
     skew = [m for m in res.metrics if m.get("stage") == "cand_minhash_skew"]
     assert len(skew) == 1
     assert {"hot_buckets", "pairs_elided", "dropped_buckets",
@@ -378,9 +377,8 @@ def test_pipeline_reports_skew_metrics(spark):
 
 
 def test_pipeline_reports_skew_once_in_checkpoint_mode(spark, tmp_path):
-    """count-mode metrics with a checkpoint dir: the skew report is taken
-    once, after the cand_minhash parquet write, not also by a deferred job
-    racing that write."""
+    """with a checkpoint dir the skew report is one entry, deferred after
+    the cand_minhash parquet write."""
     from microdeduplication_spark.config import DedupConfig
     from microdeduplication_spark.pipeline import run_pipeline
 
@@ -390,8 +388,7 @@ def test_pipeline_reports_skew_once_in_checkpoint_mode(spark, tmp_path):
         rows, "repo string, path string, commit string, lang string, content string"
     )
     res = run_pipeline(spark, files, DedupConfig(), passes=("minhash",),
-                       checkpoint_dir=str(tmp_path / "ck"),
-                       eager_metrics="count")
+                       checkpoint_dir=str(tmp_path / "ck"))
     skew = [m for m in res.metrics if m.get("stage") == "cand_minhash_skew"]
     assert len(skew) == 1
     assert {"hot_buckets", "pairs_elided", "dropped_buckets",

@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import json
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -101,28 +107,89 @@ def test_statistics(result, corpus):
     assert total == s["files"]
 
 
-def test_resume_idempotent(spark, corpus, files_df, cfg, tmp_path_factory):
-    """north_rule: any stage resumes idempotently from checkpoints."""
+def _clusters(res):
+    return sorted((r["file_id"], r["cluster_id"])
+                  for r in res.clusters.collect())
+
+
+@pytest.fixture(scope="module")
+def checkpointed(spark, files_df, cfg, tmp_path_factory):
+    """One checkpoint-mode run: (dir, clusters, verified rows, stage names)."""
     ckdir = str(tmp_path_factory.mktemp("ck"))
-    r1 = run_pipeline(spark, files_df, cfg, checkpoint_dir=ckdir)
-    c1 = sorted((r["file_id"], r["cluster_id"]) for r in r1.clusters.collect())
+    res = run_pipeline(spark, files_df, cfg, checkpoint_dir=ckdir)
+    verified = sorted(tuple(r) for r in res.verified.collect())
+    return ckdir, _clusters(res), verified, {m["stage"] for m in res.metrics}
+
+
+def test_in_memory_and_checkpoint_modes_agree(result, checkpointed):
+    """The two stage behaviours give the same clusters, the same verified
+    pairs and the same set of stage metrics entries."""
+    ckdir, clusters, verified, stage_names = checkpointed
+    assert _clusters(result) == clusters
+    assert sorted(tuple(r) for r in result.verified.collect()) == verified
+    assert {m["stage"] for m in result.metrics} == stage_names
+    assert "signatures" not in stage_names
+    assert not os.path.exists(os.path.join(ckdir, "signatures"))
+
+
+def test_resume_idempotent(spark, files_df, cfg, checkpointed):
+    """north_rule: any stage resumes idempotently from checkpoints."""
+    ckdir, c1, _, _ = checkpointed
 
     # second run: every stage must come from checkpoint, bit-identical result
     r2 = run_pipeline(spark, files_df, cfg, checkpoint_dir=ckdir)
     assert all(m.get("cached") for m in r2.metrics), r2.metrics
-    c2 = sorted((r["file_id"], r["cluster_id"]) for r in r2.clusters.collect())
-    assert c1 == c2
+    assert _clusters(r2) == c1
 
     # delete a mid-pipeline stage -> it and downstream recompute, same result
-    import shutil, os
-
-    shutil.rmtree(os.path.join(ckdir, "signatures"))
-    os.remove(os.path.join(ckdir, "signatures.manifest.json"))
+    shutil.rmtree(os.path.join(ckdir, "shingles"))
+    os.remove(os.path.join(ckdir, "shingles.manifest.json"))
     r3 = run_pipeline(spark, files_df, cfg, checkpoint_dir=ckdir)
     cached = {m["stage"]: m.get("cached") for m in r3.metrics}
     assert cached["normalized"] is True
-    assert cached["signatures"] is False
-    assert cached["cand_minhash"] is False
-    assert cached["cand_simhash"] is False
-    c3 = sorted((r["file_id"], r["cluster_id"]) for r in r3.clusters.collect())
-    assert c1 == c3
+    for stage in ("shingles", "cand_minhash", "cand_simhash", "verified"):
+        assert cached[stage] is False, stage
+    assert _clusters(r3) == c1
+
+
+def _tiny_files(spark):
+    rows = [("r", f"f{i}.py", f"c{i}", "python",
+             f"a = {i}\nb = {i*2}\nc = join(a, b)") for i in range(20)]
+    rows += [rows[0][:1] + ("dup.py", "cx", "python", rows[0][4])]
+    return spark.createDataFrame(
+        rows, ["repo", "path", "commit", "lang", "content"])
+
+
+def test_layout_v2_checkpoints_rebuild(spark, cfg, tmp_path):
+    """A checkpoint dir written by the stage-layout-v2 code (which still had
+    a signatures stage and the max_pairs_per_bucket field) is rebuilt, not
+    reloaded."""
+    from microdeduplication_spark.pipeline import ALL_PASSES
+
+    ckdir = str(tmp_path / "ck")
+    files = _tiny_files(spark)
+    c1 = _clusters(run_pipeline(spark, files, cfg, checkpoint_dir=ckdir))
+    v2_hash = hashlib.sha256(json.dumps(
+        [{**cfg.to_dict(), "max_pairs_per_bucket": 0},
+         list(ALL_PASSES) + ["stage-layout-v2"]],
+        sort_keys=True).encode()).hexdigest()[:16]
+    for path in glob.glob(os.path.join(ckdir, "*.manifest.json")):
+        with open(path) as f:
+            man = json.load(f)
+        with open(path, "w") as f:
+            json.dump({**man, "config_hash": v2_hash}, f)
+    res = run_pipeline(spark, files, cfg, checkpoint_dir=ckdir)
+    assert not any(m.get("cached") for m in res.metrics), res.metrics
+    assert _clusters(res) == c1
+
+
+def test_caller_job_description_survives(spark, cfg):
+    """run_pipeline labels its jobs stage:<name> and then hands the caller
+    back its own job description."""
+    sc = spark.sparkContext
+    sc.setJobDescription("caller-label")
+    try:
+        run_pipeline(spark, _tiny_files(spark), cfg)
+        assert sc.getLocalProperty("spark.job.description") == "caller-label"
+    finally:
+        sc.setJobDescription(None)

@@ -36,20 +36,6 @@ def test_parse_quads_and_stats(spark, tmp_path):
     ]
 
 
-def test_eager_persist_mode_equals_lazy(spark, cfg):
-    from microdeduplication_spark.pipeline import run_pipeline
-
-    rows = [("r", f"f{i}.py", f"c{i}", "python",
-             f"a = {i}\nb = {i*2}\nc = join(a, b)") for i in range(20)]
-    rows += [rows[0][:1] + ("dup.py", "cx", "python", rows[0][4])]
-    df = spark.createDataFrame(rows, ["repo", "path", "commit", "lang", "content"])
-    lazy = run_pipeline(spark, df, cfg)
-    fast = run_pipeline(spark, df, cfg, eager_metrics="persist")
-    a = sorted((r["file_id"], r["cluster_id"]) for r in lazy.clusters.collect())
-    b = sorted((r["file_id"], r["cluster_id"]) for r in fast.clusters.collect())
-    assert a == b
-
-
 def test_url_key_and_suffix_filter(spark):
     from pyspark.sql import functions as F
 
